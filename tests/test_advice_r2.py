@@ -9,7 +9,8 @@ Each test reproduces a bug the round-1 fixtures dodged:
 3. op_udaf returned 0 / raised ValueError for all-NULL groups where
    SQL SUM/MAX return NULL.
 4. The distributed dump reader silently dropped a second top-level
-   statement sharing a physical line with the first.
+   statement sharing a physical line with the first (re-asserted
+   against the statement-aligned range reader at every range count).
 5. _parse_value collapsed backslash-escaped quote pairs ('a\\'\\'b'
    must parse to a''b, not a'b).
 """
@@ -20,9 +21,8 @@ import pandas as pd
 
 from universal_data_to_orc_converter_spark.registry import load_all_queries
 from universal_data_to_orc_converter_spark.sources.sqldump import _parse_value
-from universal_data_to_orc_converter_spark.sources.sqldump_datasource import (
-    SqlDumpDataSource,
-)
+
+from .test_sqldump_ranges import RANGES, read
 
 
 def _write_documents(spark, tmp_path, docs):
@@ -99,8 +99,7 @@ def test_udaf_all_null_group_returns_null(spark, tmp_path):
 def test_datasource_multiple_statements_per_line(spark, tmp_path):
     """Two top-level INSERTs on one physical line both yield rows, and a
     statement that STARTS mid-line and closes on a later line parses
-    once."""
-    spark.dataSource.register(SqlDumpDataSource)
+    once, at every range count."""
     p = tmp_path / "multi.sql"
     p.write_text(
         "CREATE TABLE t (id INT, s VARCHAR(40));\n"
@@ -111,14 +110,9 @@ def test_datasource_multiple_statements_per_line(spark, tmp_path):
         "'e');\n"
         "INSERT INTO t VALUES (5, 'plain');\n"
     )
-    df = (
-        spark.read.format("sqldump")
-        .option("path", str(p))
-        .option("table", "t")
-        .load()
-    )
-    got = sorted((r["id"], r["s"]) for r in df.collect())
-    assert got == [(1, "a;b"), (2, "c"), (3, "d"), (4, "e"), (5, "plain")]
+    for n in RANGES:
+        assert read(spark, p, n)["t"] == [
+            (1, "a;b"), (2, "c"), (3, "d"), (4, "e"), (5, "plain")], n
 
 
 def test_parse_value_escape_ordering():

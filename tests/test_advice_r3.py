@@ -8,8 +8,7 @@
    read's num_partitions — it now actually threads through
    convert_mysql → export_tables.
 3. The distributed dump reader's mid-line-INSERT drop is covered in
-   tests/test_sqldump_datasource.py::
-   test_datasource_midline_insert_after_statement.
+   tests/test_sqldump_ranges.py::test_midline_insert_after_statement.
 4. op_jdbc_roundtrip's per-invocation Derby temp dirs are covered by
    the _scratch reuse assertions below.
 """

@@ -43,7 +43,10 @@ heavy_hitters_stream — stream-equals-batch tests already pin them to
 batch ops swept here, and availableNow choreography is ~10 s per op);
 maintenance.py's MG partials (store-writing maintenance op, covered by
 its own maintain/replay tests — MG summaries are mergeable by
-construction so batch splits only re-associate merges).
+construction so batch splits only re-associate merges); sqldump.py's
+dump range reader (a conversion source, not a registered op: its input
+is one range id per partition, so the batch width never reaches the
+tokenizer; tests/test_sqldump_ranges.py varies the range count).
 """
 
 from __future__ import annotations
@@ -137,6 +140,7 @@ def test_sweep_covers_every_arrow_call_site():
         "maintenance.py": 1,       # MG partials (excluded, mergeable)
         "multimodal.py": 2,        # decode digest, audio digest
         "sampling.py": 1,          # curriculum shard ranker
+        "sqldump.py": 1,           # dump range reader (excluded)
         "similarity.py": 4,        # cell GEMM, PQ encode, ADC scan,
                                    # sim_topk scoring (mapInArrow, r16)
         "text.py": 2,              # winnow, heavy-hitters

@@ -92,70 +92,66 @@ def query(
 #: A separate lag guard (tests/test_staleness_budget.py) fails if the
 #: window ever falls MORE than one round behind the ledger, so the
 #: rotation still cannot be skipped.
-WINDOW_ROUND: int = 15
+WINDOW_ROUND: int = 16
 
 DRIVER_PRIORITY: tuple[str, ...] = (
     # headline flagship — always in the window
     "flagship_revenue_by_nation",
-    # Inherited-state catch-up (r16): the r15 optimization round did not
-    # rotate the window (it carried the r14 pin), so the ledger is one
-    # rotation ahead and two stale cohorts (24 r9 names, 43 r10 names)
-    # are queued. One 50-seat window cannot refresh both cohorts, so the
-    # pin advances one round (15 — lag 1, the maximum the gate allows)
-    # and the seats go stalest-first: all 24 r9 names plus the first 25
-    # r10 names in registration order (rotate_window.py proposal,
-    # CORRECTNESS_r15 had zero red rows and the below-fold queue is
-    # empty). The 18 remaining r10 names are within next rotation's
-    # capacity (look-ahead gate: 18 <= 50).
-    "op_join_theta",
-    "op_join_salted",
-    "op_tpch_q3_shipping_priority",
-    "op_tpch_q18_large_orders",
-    "op_latest_by_key",
-    "op_tpch_q13_order_counts",
-    "op_tpch_q7_nation_volume",
-    "op_tpch_q10_returned_items",
-    "op_join_asof_nearest",
-    "op_quantile_histogram_maintain",
-    "op_heavy_hitters_maintain",
-    "op_project",
-    "op_filter_compound",
-    "op_unpivot",
-    "op_sql_passthrough",
-    "op_union_mixed_schema",
-    "op_topk",
-    "op_text_normalize",
-    "op_pandas_api",
-    "op_arrow_interchange",
-    "op_retention_cohorts",
-    "op_time_gapfill",
-    "op_stream_heavy_hitters",
-    "op_stream_quantiles",
-    "op_row_count",
-    "op_agg_count_distinct",
-    "op_agg_rollup",
-    "op_agg_cube",
-    "op_agg_gsets",
-    "op_agg_conditional",
-    "op_agg_listagg",
-    "op_agg_bitwise",
-    "op_grouped_sample",
-    "op_dedup_minhash_lsh",
-    "op_dedup_url_canonical",
-    "op_jsonl_corrupt_scan",
-    "op_compact_small_files",
-    "op_xml_roundtrip",
-    "op_join_outer",
-    "op_join_semi",
-    "op_join_range_bucketized",
-    "op_join_nullsafe",
-    "op_tpch_q4_order_priority",
-    "op_tpch_q14_promo_share",
-    "op_tpch_q19_disjunctive",
-    "op_snapshot_diff",
-    "op_select_star",
-    "op_union_distinct",
-    "op_except",
+    # Rotation after CORRECTNESS_r16 (scripts/rotate_window.py
+    # --modified <the r16-touched ops>, r16 VERDICT item 3): the nine
+    # r16-modified ops still registered, then stalest-first refreshes,
+    # all 18 remaining r10 names first. CORRECTNESS_r16 had zero red
+    # rows and the below-fold queue is empty. The pin is round 16, one
+    # behind the ledger (lag 1), so the budget floor is r11.
+    "op_sim_topk",
+    "op_pca_project",
+    "op_embedding_covariance",
+    "op_connected_components_star",
+    "op_graph_triangles",
+    "op_dedup_ngram_jaccard",
+    "op_dedup_simhash",
+    "op_dedup_clusters",
+    "op_stream_python_source",
+    "op_embedding_quantize",
+    "op_limit_offset",
+    "op_subquery_correlated",
+    "op_lang_id",
+    "op_text_repetition",
+    "op_span_corruption",
+    "op_doc_rarity",
+    "op_tpch_q5_local_supplier",
+    "op_udaf",
+    "op_win_topk_group",
+    "op_str_funcs",
+    "op_map_funcs",
+    "op_stream_availablenow",
+    "op_stream_watermark",
+    "op_stream_dedup",
+    "op_stream_stateful",
+    "op_stream_interval_join",
+    "op_sessionize",
+    "op_agg_grouping_id",
+    "op_skew_profile",
+    "op_winsorize",
+    "op_agg_bucketed_no_shuffle",
+    "op_rank_fusion",
+    "op_ab_test",
+    "op_trend_slope",
+    "op_event_transitions",
+    "op_stratified_sample",
+    "op_dedup_jaccard_prefix",
+    "op_pagerank",
+    "op_partition_pruned_join",
+    "op_federated_join",
+    "op_join_fuzzy_blocked",
+    "op_kmeans",
+    "op_incremental_distinct_maintain",
+    "op_incremental_file_ingest",
+    "op_quality_audit",
+    "op_observed_metrics",
+    "op_manifest_audit",
+    "op_multimodal_meta",
+    "op_filter",
 )
 
 #: Names registered AFTER this round's DRIVER_PRIORITY was pinned that

@@ -1,7 +1,6 @@
 """Python batch DataSource WRITER (Spark 4 DataSource API) — the
-third leg of the Python data-source surface: sqldump_datasource.py
-covers distributed batch READ, replay_stream.py covers streaming read;
-this module covers batch WRITE with a real two-phase commit.
+write side of the Python data-source surface (replay_stream.py covers
+streaming read): batch WRITE with a real two-phase commit.
 
 ``eventdump`` writes a DataFrame as line-oriented text dumps using the
 task-temp + driver-commit protocol every distributed writer needs:
@@ -191,8 +190,8 @@ from ..scratch import session_scratch  # noqa: E402
     "atomically renames acknowledged parts and writes a _SUCCESS "
     "manifest, abort leaves the destination untouched — the "
     "HadoopMapReduceCommitProtocol design through the Spark 4 Python "
-    "writer API (completing the surface: sqldump_datasource = batch "
-    "read, events_replay = streaming read). The query writes events "
+    "writer API (events_replay covers streaming read). The query "
+    "writes events "
     "through the sink, reads the dumps back (schema-applied CSV "
     "read over part-*.dump), and the aggregate must hash-match the "
     "original table's oracle — no row lost or duplicated by the "
@@ -304,9 +303,9 @@ EventDumpSink.streamWriter = _stream_writer
         GROUP BY event_type
     """,
     notes="Structured Streaming INTO a user-defined Python sink — the "
-    "fourth and final leg of the Python DataSource surface (batch "
-    "read: sqldump; stream read: events_replay; batch write: "
-    "op_python_datasource_writer; this op: stream write). The events "
+    "last leg of the Python DataSource surface (stream read: "
+    "events_replay; batch write: op_python_datasource_writer; this "
+    "op: stream write). The events "
     "fixture is re-sharded into 4 files and streamed "
     "maxFilesPerTrigger=1 into the eventdump sink under availableNow, "
     "so the per-EPOCH two-phase commit runs 4 times (task temp files "

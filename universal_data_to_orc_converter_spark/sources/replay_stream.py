@@ -1,5 +1,4 @@
-"""Python STREAMING data source (Spark 4 DataSource API) — the
-incremental companion to sources/sqldump_datasource.py's batch reader.
+"""Python STREAMING data source (Spark 4 DataSource API).
 
 ``events_replay`` replays a parquet file as a rate-limited stream of
 row-slices: offsets are plain row indices, each ``read`` returns at
@@ -20,8 +19,8 @@ data; executors deserialize the rows of their slice only. For a
 checkpoint makes reprocessing exactly-once. (A Kafka-class source
 additionally partitions the offset space; this replay source is
 single-partition by design — its job is API parity, not broker
-parity, and the sqldump DataSource already shows distributed
-byte-range planning on the batch side.)
+parity; sources/sqldump.py shows byte-range planning on the batch
+side.)
 """
 
 from __future__ import annotations
@@ -183,8 +182,8 @@ from ..streaming.runner import stream_partitions  # noqa: E402
     "rows; 2 micro-batches from sf0.01 up) under the default "
     "trigger; a complete-mode grouped aggregate is served once the "
     "offsets drain and must hash-match the batch oracle. This is the "
-    "streaming half of the Spark-4 Python DataSource API (the sqldump "
-    "source covers the batch half): offsets, prefetch, commit, and "
+    "streaming half of the Spark-4 Python DataSource API (the "
+    "eventdump writer covers batch write): offsets, prefetch, commit, and "
     "exact readBetweenOffsets replay all exercised through a "
     "user-defined source with zero JVM code. The final complete-mode "
     "emission is batch-boundary-independent, so the result is "
